@@ -75,10 +75,13 @@ CHANGED_THIS_ROUND = [
     # round 18 OPTIMIZATION (see OPTIMIZATION_r18.md) — reset per the
     # r17 verdict ask #9 (only entries whose code paths changed THIS
     # round; the headline set itself is unchanged):
-    # HNSW walk family — compact edge-artifact checkpoint, shared
-    # query-batch collect, ring-distinct removal + struct-min argmin,
-    # deliberate hop-join build sides (edges_size_hint gate), layer-1
-    # probe checkpoint removal
+    # HNSW walk family — a graph whose MEASURED size (edges_size_hint:
+    # edge rows + node vectors, counted on the build's checkpoints) is
+    # below VSS_EDGE_BCAST_BYTES is descended and walked by one numpy
+    # task (one job per walk); bigger graphs keep the relational hop-
+    # join walk (candidate-side broadcast). Earlier: compact edge-
+    # artifact checkpoint, shared query-batch collect, ring-distinct
+    # removal + struct-min argmin, layer-1 probe checkpoint removal
     "hnsw_knn",
     "hnsw_adc_knn",
     "graph_greedy_search",

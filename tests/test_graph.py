@@ -347,6 +347,23 @@ def test_graph_save_load_roundtrip_and_pruning(spark, emb, tmp_path):
     b = graph.greedy_search(hg2, emb, queries, k=5, ef=32)
     assert key(a) == key(b)
 
+    # the measured size hint survives the round trip, so the reopened
+    # graph takes the same (one-task) walk path and the hnsw_knn
+    # pipeline answers identically
+    assert hg2.edges_size_hint == hg.edges_size_hint
+    assert graph._walks_in_one_task(hg2)
+
+    def hnsw_knn(g):
+        seeds = graph.descend_entry_points(g, emb, queries)
+        return _rows(
+            graph.greedy_search(
+                g, emb, queries, k=10, ef=48, max_hops=1, seeds=seeds,
+                expand=5, early_stop=False,
+            )
+        )
+
+    assert hnsw_knn(hg) == hnsw_knn(hg2)
+
     # partition pruning: a layer filter must land in PartitionFilters
     plan = (
         hg2.edges.filter(F.col("layer") == 1)
@@ -490,3 +507,197 @@ def test_hnsw_adc_knn_catalog_recall_is_adc_bounded(spark, emb):
     assert walk.count() == 200
     assert r_walk >= r_full - 0.05, (r_walk, r_full)
     assert r_walk >= 0.3  # absolute floor for this config
+
+
+# ---------------------------------------------------------------------------
+# One-task walk vs relational walk: a graph within EDGE_BCAST_BYTES is
+# descended and walked by one numpy task; EDGE_BCAST_BYTES = 0 forces the
+# relational walk. Both must give the same rows, distances bit for bit.
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def hg_knn(spark, emb):
+    """The hnsw_knn catalog entry's graph."""
+    C = kmeans.train_coarse(emb, k=8, seed=42)
+    return graph.hnsw_build(emb, C, m=8, ef_construction=32, seed=42)
+
+
+def _rows(df):
+    return sorted(
+        tuple(r) for r in df.select("query_id", "vec_id", "dist", "rank").collect()
+    )
+
+
+def _seeds(df):
+    return sorted(tuple(r) for r in df.select("query_id", "vec_id").collect())
+
+
+def test_fold_sq_dist_is_catalyst_l2_sqr_order(spark):
+    """The one-task descent scores in the Catalyst l2_sqr fold order,
+    bit for bit; numpy's pairwise row sum (the layer-0 kernel) does
+    not, so an argmin tie could break differently with it."""
+    import numpy as np
+
+    from vector_search_spark.functions.distance import l2_sqr
+
+    rng = np.random.default_rng(5)
+    B, q = rng.normal(size=(200, 64)), rng.normal(size=64)
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in b]) for i, b in enumerate(B)],
+        "i long, b array<double>",
+    )
+    qv = F.array(*[F.lit(float(x)) for x in q])
+    want = (
+        df.select("i", l2_sqr(qv, "b").alias("d")).orderBy("i")
+        .toPandas()["d"].to_numpy()
+    )
+    assert (graph._fold_sq_dist(B, q) == want).all()
+    assert (graph._row_sq_dist(B, q) != want).any()
+
+
+def _both_paths(monkeypatch, g, run):
+    """``run()`` on the one-task walk, then on the forced relational
+    walk; returns both results."""
+    assert graph._walks_in_one_task(g)
+    fused = run()
+    with monkeypatch.context() as mp:
+        mp.setattr(graph, "EDGE_BCAST_BYTES", 0)
+        assert not graph._walks_in_one_task(g)
+        relational = run()
+    return fused, relational
+
+
+def test_edges_size_hint_is_measured(spark, emb, hg_knn):
+    """The hint is the graph's measured bytes (edge rows + one float64
+    vector per node), not the optimizer estimate the build's pandas
+    UDFs inflate to ~1e11 B: within 2x of the bytes the walk holds."""
+    import numpy as np
+
+    edges = hg_knn.edges.toPandas().memory_usage(index=False).sum()
+    vecs = np.vstack(emb.toPandas()["embedding"].to_numpy()).astype(np.float64)
+    real = int(edges) + vecs.nbytes
+    assert real / 2 <= hg_knn.edges_size_hint <= 2 * real, (
+        hg_knn.edges_size_hint, real
+    )
+    assert graph._walks_in_one_task(hg_knn)
+
+
+def test_one_task_walk_equals_relational_hnsw_knn(spark, emb, hg_knn, monkeypatch):
+    """The hnsw_knn pipeline (descent + one expand=5 hop): identical
+    seeds and identical (query_id, vec_id, dist, rank) rows."""
+    queries = emb.filter(F.col("vec_id") < 20)
+    qb = graph.collect_query_batch(queries)
+
+    def run():
+        seeds = graph.descend_entry_points(hg_knn, emb, queries, query_batch=qb)
+        walk = graph.greedy_search(
+            hg_knn, emb, queries, k=10, ef=48, max_hops=1, seeds=seeds,
+            expand=5, early_stop=False, query_batch=qb,
+        )
+        return _seeds(seeds), _rows(walk)
+
+    fused, relational = _both_paths(monkeypatch, hg_knn, run)
+    assert fused == relational
+    assert len(fused[0]) == 20 and len(fused[1]) == 200
+
+
+def test_one_task_walk_equals_relational_early_stop(spark, emb, hg_knn, monkeypatch):
+    """early_stop=True over a multi-hop budget with expand=1: the
+    per-query stop gives the relational loop's rows."""
+    queries = emb.filter(F.col("vec_id") < 12)
+
+    def run():
+        seeds = graph.descend_entry_points(hg_knn, emb, queries)
+        return _rows(
+            graph.greedy_search(
+                hg_knn, emb, queries, k=10, ef=16, max_hops=4, seeds=seeds,
+                expand=1, early_stop=True,
+            )
+        )
+
+    fused, relational = _both_paths(monkeypatch, hg_knn, run)
+    assert fused == relational and len(fused) == 120
+
+
+@pytest.mark.parametrize("top", [0, 1])
+def test_one_task_walk_equals_relational_low_graphs(
+    spark, emb, hg_knn, monkeypatch, top
+):
+    """Graphs of max_level 0 (no descent at all) and 1 (layer-1 ring +
+    probe only): the hnsw_knn graph cut down to its lowest layers."""
+    g = graph.HNSWGraph(
+        edges=hg_knn.edges.filter(F.col("layer") <= top),
+        levels=hg_knn.levels.select(
+            "vec_id", F.least("level", F.lit(top)).alias("level")
+        ),
+        entry_point=hg_knn.entry_point,
+        max_level=top,
+        edges_size_hint=hg_knn.edges_size_hint,
+    )
+    queries = emb.filter(F.col("vec_id") < 12)
+
+    def run():
+        seeds = graph.descend_entry_points(g, emb, queries)
+        walk = graph.greedy_search(
+            g, emb, queries, k=5, ef=24, max_hops=2, seeds=seeds,
+            expand=2, early_stop=False,
+        )
+        return _seeds(seeds), _rows(walk)
+
+    fused, relational = _both_paths(monkeypatch, g, run)
+    assert fused == relational and len(fused[1]) == 60
+
+
+def test_one_task_walk_equals_relational_missing_seed(
+    spark, emb, hg_knn, monkeypatch
+):
+    """Inner-join drops stay drops. A descent seed whose vector is
+    missing from the points is skipped by both walks (and both
+    descents route around it); with the entry point missing, both
+    descents omit the same queries."""
+    queries = emb.filter(F.col("vec_id") < 12)
+    full = _seeds(graph.descend_entry_points(hg_knn, emb, queries))
+    missing = next(v for _, v in full if v != hg_knn.entry_point)
+    points = emb.filter(F.col("vec_id") != missing)
+    no_entry = emb.filter(F.col("vec_id") != hg_knn.entry_point)
+    seeds = spark.createDataFrame(full, "query_id long, vec_id long")
+
+    def run():
+        walk = graph.greedy_search(
+            hg_knn, points, queries, k=10, ef=32, max_hops=1, seeds=seeds,
+            expand=5, early_stop=False,
+        )
+        return (
+            _seeds(graph.descend_entry_points(hg_knn, points, queries)),
+            _seeds(graph.descend_entry_points(hg_knn, no_entry, queries)),
+            _rows(walk),
+        )
+
+    fused, relational = _both_paths(monkeypatch, hg_knn, run)
+    assert fused == relational
+    assert len(fused[2]) == 120 and missing not in {r[1] for r in fused[2]}
+
+
+def test_one_task_descent_equals_relational_hnsw_adc_knn(spark, emb, monkeypatch):
+    """hnsw_adc_knn: the descent takes the one-task path (its ADC walk
+    stays relational); seeds and walk rows match the relational run."""
+    from vector_search_spark.operators import pq
+
+    C = kmeans.train_coarse(emb, k=8, seed=42)
+    hg = graph.hnsw_build(emb, C, m=8, ef_construction=16, seed=42)
+    model, _ = pq.train_pq(emb, m=8, k=16, seed=42, max_iter=5)
+    codes = pq.encode(emb, model)
+    queries = emb.filter(F.col("vec_id") < 20)
+    qb = graph.collect_query_batch(queries)
+
+    def run():
+        seeds = graph.descend_entry_points(hg, emb, queries, query_batch=qb)
+        walk = graph.greedy_search_adc(
+            hg, codes, queries, model, k=10, ef=48, max_hops=1, seeds=seeds,
+            expand=5, early_stop=False, query_batch=qb,
+        )
+        return _seeds(seeds), _rows(walk)
+
+    fused, relational = _both_paths(monkeypatch, hg, run)
+    assert fused == relational and len(fused[1]) == 200

@@ -22,14 +22,30 @@ Spark replaces that with (SURVEY.md §7 step 7):
 4. ``hnsw_build`` — levels + per-layer blocked graph + heuristic
    pruning + symmetrization → a layered edge DataFrame artifact.
 5. ``descend_entry_points`` — the reference's upper-layer greedy
-   descent (ef=1 walk to each layer's local minimum) over the routing
-   skeleton (levels >= 1, ~N/m nodes) collected once to the driver.
-6. ``greedy_search`` — batch frontier-expansion over the edge artifact:
-   all queries advance one hop per iteration (join frontier⋈edges,
-   anti-join visited, score, keep top-ef). Descent-seeded, 2-3 hops
-   suffice (recall 1.0 at sf0.1); the value oracle for the walk itself
-   is the ``graph_greedy_search`` catalog query. The production
-   distributed ANN paths remain operators/ivf.py and hnsw_sharded.py.
+   descent (ef=1 walk to each layer's local minimum) from the global
+   entry point down to per-query layer-0 seeds.
+6. ``greedy_search`` — the layer-0 batch beam: every query expands
+   its frontier one hop per iteration (anti-join visited, score, keep
+   top-ef). Descent-seeded, one expanded hop suffices (recall 1.0 at
+   sf0.1); the value oracle for the walk itself is the
+   ``graph_greedy_search`` catalog query.
+
+   Both walks have two physical paths with identical answers, chosen
+   by the graph's MEASURED size (``HNSWGraph.edges_size_hint``: edge
+   rows plus one float64 vector per node, counted on the build's own
+   checkpoint actions) against ``EDGE_BCAST_BYTES`` (64 MB,
+   ``VSS_EDGE_BCAST_BYTES``):
+
+   - fits: ONE ``mapInPandas`` task over ``coalesce(1)`` of a tagged
+     union of edges + node vectors (+ seeds) walks every query of the
+     batch with a shared numpy kernel (``_LocalGraph``) — one job per
+     walk instead of one per hop;
+   - over the budget (or unmeasured): the relational walk, one
+     broadcast hop join per ring/expand step and one scoring pass per
+     layer or hop, every intermediate query-batch-sized.
+
+   The production distributed ANN paths remain operators/ivf.py and
+   hnsw_sharded.py.
 """
 
 from __future__ import annotations
@@ -40,11 +56,10 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from vector_search_spark.functions.distance import as_double_array, l2_sqr
-from vector_search_spark.functions.fanout import coalesce_small
 from vector_search_spark.operators import knn
 
 __all__ = [
@@ -508,16 +523,26 @@ class HNSWGraph:
     levels: DataFrame  # (vec_id, level)
     entry_point: int
     max_level: int
-    # Optimizer size estimate of ``edges`` captured BEFORE it was
-    # localCheckpointed (r18): a checkpointed LogicalRDD has no stats,
-    # so the planner cannot see that a small edge artifact fits a
-    # broadcast and falls back to sort-merge + AQE demotion — one extra
-    # exchange pair per walk join. The walk operators use this hint to
-    # pick the join build side deliberately (guide §3.1): edges-side
-    # broadcast (one reused build per layer) when the artifact fits,
-    # candidate-side broadcast otherwise. None = unknown = candidate
-    # side (the always-safe, caller-bounded choice).
+    # Measured bytes of the graph as the one-task walk holds it: every
+    # edge row (EDGE_ROW_BYTES) plus one float64 vector per node, counted
+    # by DataFrame.observe on the build's own localCheckpoint actions (no
+    # extra job). The walk operators compare it with EDGE_BCAST_BYTES to
+    # pick the one-task numpy walk or the relational hop-join walk. It
+    # replaces the optimizer estimate, which the build's pandas UDFs
+    # inflate past 1e12 B for a 20k-row artifact, so the gate never
+    # opened. None = unknown = relational walk.
     edges_size_hint: int | None = None
+
+
+# one edge row as the walk holds it: layer int + src, dst long + dist double
+EDGE_ROW_BYTES = 4 + 8 + 8 + 8
+
+
+def graph_bytes(edge_rows: int, nodes: int, dim: int) -> int:
+    """The value of :attr:`HNSWGraph.edges_size_hint`: the bytes one
+    task holds to walk the whole graph — its edge rows plus one float64
+    vector per node."""
+    return edge_rows * EDGE_ROW_BYTES + nodes * dim * 8
 
 
 def save_graph(graph: HNSWGraph, path: str) -> None:
@@ -541,8 +566,8 @@ def save_graph(graph: HNSWGraph, path: str) -> None:
     graph.levels.write.mode("overwrite").parquet(f"{path}/levels")
     spark = graph.edges.sparkSession
     spark.createDataFrame(
-        [(int(graph.entry_point), int(graph.max_level))],
-        "entry_point long, max_level int",
+        [(int(graph.entry_point), int(graph.max_level), graph.edges_size_hint)],
+        "entry_point long, max_level int, edges_size_hint long",
     ).write.mode("overwrite").parquet(f"{path}/meta")
 
 
@@ -550,13 +575,17 @@ def load_graph(spark, path: str) -> HNSWGraph:
     """Reopen a :func:`save_graph` artifact. The edge relation comes
     back as a layer-partitioned parquet scan, so per-layer filters in
     the walk operators prune at the directory level (plan-asserted in
-    tests/test_graph.py)."""
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
+    tests/test_graph.py). The measured size hint comes back from the
+    meta row (already collected — no extra job), so a reopened graph
+    takes the same walk path as the one that was built; an artifact
+    without it walks relationally."""
+    meta = spark.read.parquet(f"{path}/meta").collect()[0].asDict()
     return HNSWGraph(
         edges=spark.read.parquet(f"{path}/edges"),
         levels=spark.read.parquet(f"{path}/levels"),
-        entry_point=int(meta.entry_point),
-        max_level=int(meta.max_level),
+        entry_point=int(meta["entry_point"]),
+        max_level=int(meta["max_level"]),
+        edges_size_hint=meta.get("edges_size_hint"),
     )
 
 
@@ -592,15 +621,29 @@ def hnsw_build(
     # pipeline, and HNSWGraph.levels all read the same materialized
     # draw — no second F.rand evaluation anywhere (F.rand is partition-
     # dependent, so re-evaluating it in two plans invites divergence).
+    #
+    # The same action counts the nodes and their dimension (observe, no
+    # extra job) for the graph's size hint.
     lvl_expr = F.floor(-F.log(F.rand(seed)) * F.lit(m_l)).cast("int")
-    routed = route_to_cells(
-        points.withColumn("level", lvl_expr),
-        centroids,
-        nprobe,
-        id_col,
-        vec_col,
-        carry_cols=("level",),
-    ).localCheckpoint()
+    is_home = F.col("probe_rank") == 0
+    node_obs = Observation("hnsw_nodes")
+    routed = (
+        route_to_cells(
+            points.withColumn("level", lvl_expr),
+            centroids,
+            nprobe,
+            id_col,
+            vec_col,
+            carry_cols=("level",),
+        )
+        .observe(
+            node_obs,
+            F.count(F.when(is_home, 1)).alias("nodes"),
+            F.max(F.size("v")).alias("dim"),
+        )
+        .localCheckpoint()
+    )
+    node_counts = node_obs.get
     levels = routed.filter(F.col("probe_rank") == 0).select(
         "vec_id", "level"
     )
@@ -686,22 +729,20 @@ def hnsw_build(
     # bounded at N*m rows per layer sum, exactly what a real pipeline
     # would persist to parquet between build and serve.
     #
-    # coalesce_small (r18, guide §2.2/§6): the pinned artifact otherwise
-    # inherits the symmetrize shuffle's partition count (~40 sub-KB
-    # partitions at bench scale), and EVERY per-layer filter in the
-    # descent + walk re-scans all of them — measured ~10 scans x ~40
-    # tasks of scheduling for kilobytes. Identity at scale (estimate-
-    # gated), so a big graph keeps its partitioning. The pre-checkpoint
-    # size estimate is kept on the artifact so the walk operators can
-    # pick join build sides the planner no longer can (stats are lost
-    # at the checkpoint — see HNSWGraph.edges_size_hint).
-    from vector_search_spark.functions.fanout import plan_size_estimate
-
-    est = plan_size_estimate(edges)
+    # The pin's own action counts the edge rows for the size hint. (No
+    # coalesce here: a graph within the hint's gate is read by one
+    # coalesce(1) walk task anyway, and a bigger one keeps its
+    # partitioning.)
+    edge_obs = Observation("hnsw_edges")
+    pinned = edges.observe(
+        edge_obs, F.count(F.lit(1)).alias("rows")
+    ).localCheckpoint()
     return HNSWGraph(
-        edges=coalesce_small(edges, est=est).localCheckpoint(),
+        edges=pinned,
         levels=levels, entry_point=int(ep), max_level=int(top),
-        edges_size_hint=est,
+        edges_size_hint=graph_bytes(
+            edge_obs.get["rows"], node_counts["nodes"], node_counts["dim"] or 0
+        ),
     )
 
 
@@ -719,23 +760,230 @@ def collect_query_batch(
     ).toPandas()
 
 
-# Edge-artifact broadcast budget for the walk joins (guide §3.1
-# "broadcast the side that fits"): mirrors the session's 64m
-# autoBroadcastJoinThreshold rationale. The gate reads the BUILD-TIME
-# size estimate (HNSWGraph.edges_size_hint) because the checkpointed
-# relation itself carries no stats; 0 disables edges-side broadcast
-# entirely (candidate-side broadcast everywhere).
+# Size budget of the one-task walk: a graph whose measured
+# HNSWGraph.edges_size_hint is below it is walked by ONE numpy task
+# (the whole graph is read into that task — the same order of bytes
+# as the session's 64m autoBroadcastJoinThreshold); bigger or
+# unmeasured graphs take the relational walk. 0 forces the relational
+# walk everywhere.
 EDGE_BCAST_BYTES = int(
     os.environ.get("VSS_EDGE_BCAST_BYTES", str(64 * 1024 * 1024))
 )
 
 
-def _edges_fit_broadcast(graph: "HNSWGraph") -> bool:
+def _walks_in_one_task(graph: "HNSWGraph") -> bool:
     return (
-        EDGE_BCAST_BYTES > 0
-        and graph.edges_size_hint is not None
+        graph.edges_size_hint is not None
         and graph.edges_size_hint < EDGE_BCAST_BYTES
     )
+
+
+def _row_sq_dist(B: np.ndarray, Q: np.ndarray) -> np.ndarray:
+    """The layer-0 walk's distance kernel, ``((B - Q)^2)`` summed per
+    row by numpy — shared by the relational scorer and the one-task
+    walk so both give bit-equal distances."""
+    return ((B - Q) ** 2).sum(axis=1)
+
+
+def _fold_sq_dist(B: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """The descent's distance in Catalyst ``l2_sqr`` order: from 0.0,
+    ``acc = acc + (q_j - b_j)^2`` one dimension at a time (numpy's row
+    sum is pairwise, so it could break an argmin tie differently)."""
+    d = q - B
+    sq = d * d
+    acc = np.zeros(len(B))
+    for j in range(sq.shape[1]):
+        acc = acc + sq[:, j]
+    return acc
+
+
+# The one-task walk's input: ONE relation of tagged rows, so a single
+# coalesce(1) task reads the edges, the node vectors and the seeds
+# through the scan (never through the driver). Unused numeric fields
+# are 0, not NULL: Arrow turns a nullable long into float64 in pandas.
+_EDGE, _NODE, _SEED = 0, 1, 2
+
+
+def _tagged(
+    df: DataFrame,
+    tag: int,
+    a: str,
+    b: str | None = None,
+    lvl: str | None = None,
+    v: str | None = None,
+) -> DataFrame:
+    """Edge rows (a=src, b=dst, lvl=layer), node rows (a=vec_id,
+    lvl=level, v=vector) or seed rows (a=query_id, b=vec_id)."""
+    return df.select(
+        F.lit(tag).alias("tag"),
+        F.col(a).cast("long").alias("a"),
+        (F.col(b) if b else F.lit(0)).cast("long").alias("b"),
+        (F.col(lvl) if lvl else F.lit(0)).cast("int").alias("lvl"),
+        (F.col(v) if v else F.lit(None)).cast("array<double>").alias("v"),
+    )
+
+
+class _LocalGraph:
+    """One task's view of the tagged rows: node ids ascending (so an
+    index tie-break IS the ``(dist, vec_id)`` tie-break), one CSR
+    adjacency per layer, and the vectors (+ levels) of the nodes that
+    have a row — a node without one is never scored, exactly as the
+    relational walk's inner join drops it."""
+
+    def __init__(self, batches, entry_point: int, dim: int):
+        frames = list(batches)
+        pdf = (
+            pd.concat(frames, ignore_index=True)
+            if frames
+            else pd.DataFrame({c: [] for c in ("tag", "a", "b", "lvl", "v")})
+        )
+        tag = pdf["tag"].to_numpy()
+        e, nd, sd = (pdf[tag == t] for t in (_EDGE, _NODE, _SEED))
+        src, dst = e["a"].to_numpy(np.int64), e["b"].to_numpy(np.int64)
+        nid = nd["a"].to_numpy(np.int64)
+        sq, sv = sd["a"].to_numpy(np.int64), sd["b"].to_numpy(np.int64)
+        self.ids = np.unique(
+            np.concatenate([src, dst, nid, sv, [entry_point]])
+        )
+        self.n = n = len(self.ids)
+        self.entry = self.pos(entry_point)
+        ni = self.pos(nid)
+        self.has_vec = np.zeros(n, bool)
+        self.has_vec[ni] = True
+        self.vrow = np.zeros(n, np.int64)
+        self.vrow[ni] = np.arange(len(ni))
+        self.V = (
+            np.vstack(nd["v"].to_numpy()) if len(nd) else np.zeros((0, dim))
+        )
+        self.level = np.full(n, -1, np.int64)
+        self.level[ni] = nd["lvl"].to_numpy(np.int64)
+        self.adj = {}
+        layer, si, di = e["lvl"].to_numpy(), self.pos(src), self.pos(dst)
+        for lay in np.unique(layer):
+            s, d = si[layer == lay], di[layer == lay]
+            indptr = np.zeros(n + 1, np.int64)
+            np.cumsum(np.bincount(s, minlength=n), out=indptr[1:])
+            self.adj[int(lay)] = (indptr, d[np.argsort(s, kind="stable")])
+        self.seeds = {
+            int(q): np.unique(self.pos(v))
+            for q, v in pd.Series(sv).groupby(sq)
+        }
+
+    def pos(self, ids) -> np.ndarray:
+        return np.searchsorted(self.ids, ids)
+
+    def vecs(self, idx: np.ndarray) -> np.ndarray:
+        return self.V[self.vrow[idx]]
+
+    def neighbors(self, layer: int, nodes: np.ndarray) -> np.ndarray:
+        """Out-neighbors of ``nodes`` at ``layer`` (with repeats)."""
+        if layer not in self.adj:
+            return np.zeros(0, np.int64)
+        indptr, nbr = self.adj[layer]
+        lo, lens = indptr[nodes], indptr[nodes + 1] - indptr[nodes]
+        offs = np.cumsum(lens) - lens
+        return nbr[np.arange(lens.sum()) + np.repeat(lo - offs, lens)]
+
+    def ball(self, layer: int, start: np.ndarray, hops: int) -> np.ndarray:
+        """Nodes within ``hops`` edges of ``start`` at ``layer``,
+        ascending — the set the relational walk's union of chained
+        edge joins reaches."""
+        seen = np.zeros(self.n, bool)
+        seen[start] = True
+        new = np.flatnonzero(seen)
+        for _ in range(hops):
+            nb = self.neighbors(layer, new)
+            nb = nb[~seen[nb]]
+            if not len(nb):
+                break
+            seen[nb] = True
+            new = np.unique(nb)
+        return np.flatnonzero(seen)
+
+    def descend(self, q, top, upper_hops, layer1_hops, probe_rounds):
+        """One query's descent under the relational rules: per upper
+        layer the ``(dist, vec_id)`` argmin over the anchor's
+        ``upper_hops`` ball among level >= 2 nodes, at layer 1 the
+        argmin over the ``layer1_hops`` ball, then ``probe_rounds``
+        one-hop probes around the incumbent. None when a layer has no
+        scoreable candidate (the relational inner joins drop the
+        query)."""
+
+        def best_of(c, d):
+            i = np.lexsort((c, d))[0]
+            return c[i], d[i]
+
+        anchor = np.array([self.entry])
+        for layer in range(top, 1, -1):
+            c = self.ball(layer, anchor, upper_hops)
+            c = c[self.has_vec[c] & (self.level[c] >= 2)]
+            if not len(c):
+                return None
+            anchor = np.array([best_of(c, _fold_sq_dist(self.vecs(c), q))[0]])
+        c = self.ball(1, anchor, layer1_hops)
+        c = c[self.has_vec[c]]
+        if not len(c):
+            return None
+        best, bd = best_of(c, _fold_sq_dist(self.vecs(c), q))
+        for _ in range(probe_rounds):
+            nb = np.unique(self.neighbors(1, np.array([best])))
+            nb = nb[self.has_vec[nb]]
+            best, bd = best_of(
+                np.append(nb, best),
+                np.append(_fold_sq_dist(self.vecs(nb), q), bd),
+            )
+        return best
+
+    def walk(self, q, seeds, k, ef, max_hops, expand, early_stop):
+        """One query's layer-0 beam under the relational rules: the
+        scored seeds open the beam and the visited set; each hop scores
+        the unvisited nodes within ``expand`` edges of the frontier,
+        keeps the ``(dist, vec_id)``-first ``ef`` of beam + scored, and
+        the admitted new nodes become the next frontier (and visited).
+        A query whose frontier empties is done — the relational loop's
+        later hops could not change its beam. Returns (idx, dist) of the
+        top ``k``."""
+        res = seeds[self.has_vec[seeds]]
+        res_d = _row_sq_dist(self.vecs(res), q)
+        visited = np.zeros(self.n, bool)
+        visited[res] = True
+        frontier = res
+        for hop in range(max_hops):
+            if not len(frontier):
+                break
+            c = self.ball(0, frontier, max(1, expand))
+            c = c[~visited[c] & self.has_vec[c]]
+            ci = np.concatenate([res, c])
+            cd = np.concatenate([res_d, _row_sq_dist(self.vecs(c), q)])
+            o = np.lexsort((ci, cd))[:ef]
+            res, res_d = ci[o], cd[o]
+            if not (early_stop or hop < max_hops - 1):
+                break
+            frontier = res[o >= len(ci) - len(c)]
+            visited[frontier] = True
+        o = np.lexsort((res, res_d))[:k]
+        return res[o], res_d[o]
+
+
+def _one_task(rows, qids, Q, entry_point, per_query, schema) -> DataFrame:
+    """Walk every query of the batch inside ONE task over all of
+    ``rows`` (tagged edges + node vectors + seeds, read by the scan):
+    ``per_query(graph, query_id, q)`` gives that query's output columns
+    (``vec_id`` first), and the batch rides as a broadcast."""
+    bc = rows.sparkSession.sparkContext.broadcast((qids, Q))
+
+    def fn(batches):
+        b_qids, b_Q = bc.value
+        g = _LocalGraph(batches, entry_point, b_Q.shape[1])
+        parts = [per_query(g, int(qid), q) for qid, q in zip(b_qids, b_Q)]
+        yield pd.DataFrame(
+            {
+                "query_id": np.repeat(b_qids, [len(p["vec_id"]) for p in parts]),
+                **{c: np.concatenate([p[c] for p in parts]) for c in parts[0]},
+            }
+        )
+
+    return rows.coalesce(1).mapInPandas(fn, schema)
 
 
 def _broadcast_query_scorer(
@@ -783,7 +1031,7 @@ def _broadcast_query_scorer(
                 qi = np.array(
                     [pos[int(q)] for q in pdf["query_id"]], dtype=np.int64
                 )
-                d = ((B - b_Q[qi]) ** 2).sum(axis=1)
+                d = _row_sq_dist(B, b_Q[qi])
                 yield pd.DataFrame(
                     {
                         "query_id": pdf["query_id"],
@@ -933,24 +1181,31 @@ def descend_entry_points(
     neighbor while it improves), then drop a layer. Returns
     (query_id, vec_id) — per-query layer-0 entry seeds.
 
-    FULLY DISTRIBUTED (round 6 — retires the last N-scaling driver
-    collect): every layer's walk is the same relational recipe —
-    candidates = anchor ∪ up-to-``hops`` chained edge-joins in that
-    layer, one scorer pass, per-query argmin (anchor included, so the
-    descent is monotone) — and the per-layer argmin is just a DataFrame
-    transform of the previous layer's anchor, so the WHOLE descent
-    composes into one lazy plan. No ``.toPandas()`` anywhere; the only
-    driver-side data is the query batch itself (model-sized, broadcast
-    by design, as in every serving path here).
+    TWO PATHS, one answer. The only driver-side data is the query
+    batch itself (model-sized, as in every serving path here); edges
+    and vectors are only ever read by executors.
 
-    Scan economics at 100 TB: the layers>=2 scoring passes probe
-    ``upper_base`` — the routing skeleton's (id, vector) relation,
-    ~N/m^2 rows, materialized once per call via localCheckpoint
-    (distributed, executor-resident; the artifact a real pipeline would
-    persist beside the edge list) — so walking L layers costs L joins
-    against an index-sized relation, not L scans of the vector table.
-    Layer 1 (~N/m — too big to materialize) is scored against the full
-    vector table: one ring pass + ``probe_rounds`` boundary probes.
+    - A graph whose measured size (``HNSWGraph.edges_size_hint``) is
+      below ``EDGE_BCAST_BYTES`` descends in ONE ``mapInPandas`` task:
+      it reads the edges of layers >= 1 plus the level >= 1 nodes'
+      vectors and walks every query of the broadcast batch in numpy
+      (``_LocalGraph.descend``) — one job instead of ~20 at bench
+      scale.
+    - A bigger (or unmeasured) graph descends relationally: every
+      layer's walk is candidates = anchor ∪ up-to-``hops`` chained
+      edge-joins in that layer, one scorer pass, per-query argmin
+      (anchor included, so the descent is monotone), and the layers
+      compose into one lazy plan. The layers>=2 passes probe
+      ``upper_base`` — the routing skeleton's (id, vector) relation,
+      ~N/m^2 rows, localCheckpointed once per call — so walking L
+      layers costs L joins against an index-sized relation, not L
+      scans of the vector table. Layer 1 (~N/m — too big to
+      materialize) is scored against the full vector table: one ring
+      pass + ``probe_rounds`` boundary probes.
+
+    Both score with the Catalyst ``l2_sqr`` fold order and break every
+    tie on ``(dist, vec_id)``; a query with no scoreable candidate on
+    some layer is omitted by both.
 
     DEVIATION from reference semantics (SURVEY §8 #32 note): the
     reference's ef=1 walk (py/hnsw.py:408-409) hops an UNBOUNDED
@@ -986,6 +1241,29 @@ def descend_entry_points(
     qids = qpdf["query_id"].to_numpy()
     if not len(qids):
         raise ValueError("empty query set")
+    if graph.max_level >= 1 and _walks_in_one_task(graph):
+        # the task reads the edges of layers >= 1 and the vectors of the
+        # level >= 1 nodes, semi-joined through a broadcast of their ids
+        # (never of vectors)
+        upper = graph.levels.filter(F.col("level") >= 1)
+        nodes = points.select(
+            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_v")
+        ).join(F.broadcast(upper), "vec_id")
+        rows = _tagged(
+            graph.edges.filter(F.col("layer") >= 1), _EDGE, "src", "dst",
+            "layer",
+        ).unionByName(_tagged(nodes, _NODE, "vec_id", lvl="level", v="_v"))
+        top = graph.max_level
+
+        def descend(g, qid, q):
+            best = g.descend(q, top, upper_hops, layer1_hops, probe_rounds)
+            return {"vec_id": g.ids[[] if best is None else [best]]}
+
+        return _one_task(
+            rows, qids.astype(np.int64),
+            np.vstack(qpdf["_qv"].to_numpy()).astype(np.float64),
+            graph.entry_point, descend, "query_id long, vec_id long",
+        )
     # NOTE (r18, measured): do NOT coalesce(1) this literal. A single-
     # partition seed's SinglePartition output satisfies every downstream
     # clustering requirement, so Catalyst DROPS the argmin exchanges —
@@ -1074,21 +1352,13 @@ def descend_entry_points(
     # Deliberate join build side for every walk join (guide §3.1): the
     # checkpointed edge artifact has no optimizer stats, so the planner
     # would plan sort-merge and rely on AQE demotion — one materialized
-    # exchange pair per hop join. When the build-time size hint says
-    # the WHOLE artifact fits a broadcast, ship the edges once per
-    # layer (every hop reuses the same BroadcastExchange); otherwise
-    # broadcast the caller-bounded candidate chain per hop (never the
-    # corpus side).
-    edges_bcast = _edges_fit_broadcast(graph)
-
+    # exchange pair per hop join. Broadcast the caller-bounded candidate
+    # chain per hop (never the corpus side).
     def hop(cur: DataFrame, edges: DataFrame) -> DataFrame:
         src = cur.select("query_id", F.col("vec_id").alias("src"))
-        j = (
-            src.join(F.broadcast(edges), "src")
-            if edges_bcast
-            else F.broadcast(src).join(edges, "src")
+        return F.broadcast(src).join(edges, "src").select(
+            "query_id", F.col("dst").alias("vec_id")
         )
-        return j.select("query_id", F.col("dst").alias("vec_id"))
 
     def ring_candidates(anchor_ids: DataFrame, edges: DataFrame, hops: int):
         rings = [anchor_ids]
@@ -1244,8 +1514,44 @@ def greedy_search(
     frontier/visited subtrees are dead, so the final top-k window fuses
     into the same job; with max_hops=1 the whole search runs as one
     job after the seed scoring.
+
+    With the default scorer, a graph whose measured size is below
+    ``EDGE_BCAST_BYTES`` is walked by ONE ``mapInPandas`` task instead
+    (``_LocalGraph.walk``: same rules, same distance kernel, same
+    ``(dist, vec_id)`` order — identical rows) over the layer-0 edges,
+    the node vectors and the seeds; the relational loop below serves
+    bigger graphs and the ADC walk.
     """
     spark = queries.sparkSession
+    if scorer is None and _walks_in_one_task(graph):
+        qpdf = (
+            query_batch
+            if query_batch is not None
+            else collect_query_batch(queries, id_col, vec_col)
+        )
+        if not len(qpdf):
+            raise ValueError("empty query set")
+        rows = _tagged(
+            graph.edges.filter(F.col("layer") == 0), _EDGE, "src", "dst",
+            "layer",
+        ).unionByName(_tagged(points, _NODE, id_col, v=vec_col))
+        if seeds is not None:
+            rows = rows.unionByName(
+                _tagged(seeds, _SEED, "query_id", "vec_id")
+            )
+
+        def walk(g, qid, q):
+            s = np.union1d(g.seeds.get(qid, []), [g.entry]).astype(np.int64)
+            idx, d = g.walk(q, s, k, ef, max_hops, expand, early_stop)
+            rank = np.arange(1, len(idx) + 1, dtype=np.int32)
+            return {"vec_id": g.ids[idx], "dist": d, "rank": rank}
+
+        return _one_task(
+            rows, qpdf["query_id"].to_numpy(dtype=np.int64),
+            np.vstack(qpdf["qv"].to_numpy()).astype(np.float64),
+            graph.entry_point, walk,
+            "query_id long, vec_id long, dist double, rank int",
+        )
     if scorer is None:
         qids, score = _broadcast_query_scorer(
             points, queries, id_col, vec_col, query_batch=query_batch
@@ -1253,11 +1559,6 @@ def greedy_search(
     else:
         qids, score = scorer
     edges0 = graph.edges.filter(F.col("layer") == 0).select("src", "dst")
-    # Deliberate build side for the hop joins (guide §3.1, same gate as
-    # descend_entry_points): edges-side broadcast when the artifact's
-    # build-time estimate fits (every hop reuses ONE BroadcastExchange);
-    # frontier-side broadcast otherwise (caller-bounded, never corpus).
-    edges_bcast = _edges_fit_broadcast(graph)
 
     # seed: entry point for every query (+ any caller-provided anchors)
     # (not coalesce(1)d — see the SinglePartition note in
@@ -1292,12 +1593,12 @@ def greedy_search(
         cur = frontier.select("query_id", "vec_id")
         hops = []
         for _h in range(max(1, expand)):
+            # frontier-side broadcast (guide §3.1): caller-bounded,
+            # never the corpus side
             src = cur.select("query_id", F.col("vec_id").alias("src"))
-            cur = (
-                src.join(F.broadcast(edges0), "src")
-                if edges_bcast
-                else F.broadcast(src).join(edges0, "src")
-            ).select("query_id", F.col("dst").alias("vec_id"))
+            cur = F.broadcast(src).join(edges0, "src").select(
+                "query_id", F.col("dst").alias("vec_id")
+            )
             hops.append(cur)
         reached = hops[0]
         for h in hops[1:]:

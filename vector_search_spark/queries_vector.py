@@ -14,7 +14,7 @@ is impossible; test semantics, not bit-parity).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from vector_search_spark import tables
@@ -1061,15 +1061,22 @@ def q_graph_greedy_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = gr.knn_graph_blocked(emb, C, k=NNG_K, nprobe=NNG_NPROBE)
     # compact the pinned walk artifact (r18, guide §6): the hop joins
     # re-scan it per hop; without the estimate-gated coalesce it keeps
-    # the repartition("src") shuffle's ~32 sub-KB partitions. The pre-
-    # checkpoint size estimate rides along so the walk picks its join
-    # build sides (graph.HNSWGraph.edges_size_hint).
-    e_df = g.select(F.lit(0).alias("layer"), "src", "dst", "dist")
-    est = plan_size_estimate(e_df)
-    edges = coalesce_small(e_df, est=est).localCheckpoint()
+    # the repartition("src") shuffle's ~32 sub-KB partitions. The pin's
+    # action also counts the edges and the nodes (one rank-1 row per
+    # src) for the graph's measured size hint, which picks the walk
+    # path (graph.HNSWGraph.edges_size_hint).
+    obs = Observation("nng_edges")
+    e_df = g.observe(
+        obs,
+        F.count(F.lit(1)).alias("rows"),
+        F.count(F.when(F.col("rank") == 1, 1)).alias("nodes"),
+    ).select(F.lit(0).alias("layer"), "src", "dst", "dist")
+    edges = coalesce_small(e_df, est=plan_size_estimate(e_df)).localCheckpoint()
     hg = gr.HNSWGraph(
         edges=edges, levels=None, entry_point=0, max_level=0,
-        edges_size_hint=est,
+        edges_size_hint=gr.graph_bytes(
+            obs.get["rows"], obs.get["nodes"], C.shape[1]
+        ),
     )
     queries = emb.filter(F.col("vec_id") < GS_Q)
     assigned = kmeans.assign(emb, C)

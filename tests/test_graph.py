@@ -533,27 +533,38 @@ def _seeds(df):
     return sorted(tuple(r) for r in df.select("query_id", "vec_id").collect())
 
 
-def test_fold_sq_dist_is_catalyst_l2_sqr_order(spark):
-    """The one-task descent scores in the Catalyst l2_sqr fold order,
-    bit for bit; numpy's pairwise row sum (the layer-0 kernel) does
-    not, so an argmin tie could break differently with it."""
+@pytest.mark.parametrize("metric", ["l2_sqr", "l2", "dot", "cosine"])
+def test_fold_sq_dist_is_catalyst_l2_sqr_order(spark, metric):
+    """The numpy fold kernel (functions.distance.fold_distance — the
+    one-task descent's and the IVF scorer's) scores in the Catalyst
+    fold order, bit for bit, for every metric, including cosine's
+    zero-norm branch; numpy's pairwise row sum (the layer-0 kernel)
+    does not, so an argmin tie could break differently with it."""
     import numpy as np
 
-    from vector_search_spark.functions.distance import l2_sqr
+    from vector_search_spark.functions.distance import distance, fold_distance
 
     rng = np.random.default_rng(5)
-    B, q = rng.normal(size=(200, 64)), rng.normal(size=64)
+    B, Q = rng.normal(size=(200, 64)), rng.normal(size=(3, 64))
+    B[7] = 0.0
+    Q[2] = 0.0
     df = spark.createDataFrame(
         [(i, [float(x) for x in b]) for i, b in enumerate(B)],
         "i long, b array<double>",
     )
-    qv = F.array(*[F.lit(float(x)) for x in q])
-    want = (
-        df.select("i", l2_sqr(qv, "b").alias("d")).orderBy("i")
-        .toPandas()["d"].to_numpy()
-    )
-    assert (graph._fold_sq_dist(B, q) == want).all()
-    assert (graph._row_sq_dist(B, q) != want).any()
+    for qi, q in enumerate(Q):
+        qv = F.array(*[F.lit(float(x)) for x in q])
+        want = (
+            df.select("i", distance(metric, qv, "b").alias("d")).orderBy("i")
+            .toPandas()["d"].to_numpy()
+        )
+        got = fold_distance(metric, Q, B)[qi]
+        assert got.tobytes() == want.tobytes(), (metric, qi)
+    if metric == "l2_sqr":
+        assert (graph._row_sq_dist(B, Q[0]) != fold_distance(metric, Q, B)[0]).any()
+    if metric == "cosine":
+        assert (fold_distance(metric, Q, B)[2] == 1.0).all()
+        assert fold_distance(metric, Q, B)[0, 7] == 1.0
 
 
 def _both_paths(monkeypatch, g, run):

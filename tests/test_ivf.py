@@ -1688,3 +1688,218 @@ def test_adc_refine_curve_invariants(spark, emb, queries):
     for row in curve:
         want = sum(min(row.shortlist, r["count"]) for r in routed)
         assert row.candidates == want, (row.shortlist, row.candidates, want)
+
+
+# --- one collect per serving call: pruning, job budget, equality -----------
+
+
+@pytest.fixture(scope="module")
+def served(spark, emb, assigned, centroids, tmp_path_factory):
+    """The persisted serving artifacts of the module's index: flat cells,
+    coarse model, PQ codes + model, raw points."""
+    from vector_search_spark.operators import pq
+
+    d = tmp_path_factory.mktemp("served")
+    paths = {n: str(d / n) for n in ("index", "cents", "codes", "model", "points")}
+    ivf.write_index(assigned, paths["index"])
+    ivf.save_centroids(spark, centroids, paths["cents"])
+    model, _ = pq.train_pq(emb, m=8, k=16, seed=42, max_iter=5)
+    codes = pq.encode(assigned, model).join(
+        assigned.select("vec_id", "cluster_id"), "vec_id"
+    )
+    ivf.write_index(codes, paths["codes"])
+    pq.save_model(spark, model, paths["model"])
+    emb.select("vec_id", "embedding").write.parquet(paths["points"])
+    return paths
+
+
+def _list_batch(spark, rows):
+    """A query batch the way a service builds one: a driver list turned
+    into a (Python-RDD-backed) DataFrame."""
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def _serving_paths(spark, served, qdf):
+    """Every persisted IVF serving call on one query batch."""
+    p = served
+    return {
+        "flat_expr": lambda: ivf.search_index(
+            spark, p["index"], p["cents"], qdf, k=K, nprobe=NPROBE
+        ),
+        "flat_gemm": lambda: ivf.search_index(
+            spark, p["index"], p["cents"], qdf, k=K, nprobe=NPROBE, impl="gemm"
+        ),
+        "adc": lambda: ivf.adc_search_index(
+            spark, p["codes"], p["cents"], p["model"], qdf, k=K, nprobe=NPROBE
+        ),
+        "adc_refined": lambda: ivf.adc_search_index(
+            spark, p["codes"], p["cents"], p["model"], qdf, k=K,
+            nprobe=NPROBE, points_path=p["points"],
+        ),
+        "adc_range": lambda: ivf.adc_range_index(
+            spark, p["codes"], p["cents"], p["model"], qdf, radius=50.0,
+            nprobe=NPROBE,
+        ),
+    }
+
+
+def _parquet_scans(plan):
+    """The parquet scan nodes of an executed (possibly adaptive) plan."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _parquet_scans(plan.executedPlan())
+    if name.endswith("QueryStageExec"):
+        return _parquet_scans(plan.plan())
+    if name == "FileSourceScanExec":
+        return [plan]
+    kids = plan.children()
+    return [s for i in range(kids.size()) for s in _parquet_scans(kids.apply(i))]
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` schedules, counted by job group the way
+    perfbench/spans.py counts a span."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"ivf-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("impl", ["expr", "gemm"])
+def test_search_index_scans_only_routed_cells(
+    spark, served, queries, centroids, impl
+):
+    """The executed plan of search_index filters the cell partitions
+    STATICALLY on exactly the routed cells (no dynamic pruning that
+    can be planned and then dropped), and the scan reads only those
+    cell directories."""
+    import re
+
+    few = queries.filter(F.col("vec_id") < 2)
+    routed = {
+        r.cluster_id
+        for r in ivf.route_queries(few, centroids, NPROBE)
+        .select("cluster_id").distinct().collect()
+    }
+    assert len(routed) < NC
+    out = ivf.search_index(
+        spark, served["index"], served["cents"], few, k=K,
+        nprobe=NPROBE, impl=impl,
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "dynamicpruningexpression" not in plan
+    pf = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
+    cells = re.search(r"cluster_id#\d+ IN \(([\d, ]+)\)", pf)
+    assert cells and {int(c) for c in cells.group(1).split(",")} == routed
+    assert len(out.collect()) == 2 * K  # runs out's own executed plan
+    (scan,) = _parquet_scans(out._jdf.queryExecution().executedPlan())
+    assert scan.metrics().apply("numPartitions").value() == len(routed)
+
+
+def test_serving_job_budget(spark, served, emb):
+    """Job budget of one serving call (the work count perfbench traces):
+    each model load is one job (the ADC one-calls load both models in
+    one), a flat call at most 5 and a refined ADC call at most 9,
+    result collection included."""
+    from vector_search_spark.operators import pq
+
+    rows = [
+        (int(r.vec_id), list(r.embedding))
+        for r in emb.filter(F.col("vec_id") < 4).collect()
+    ]
+    assert _jobs(spark, lambda: ivf.load_centroids(spark, served["cents"])) == 1
+    assert _jobs(spark, lambda: pq.load_model(spark, served["model"])) == 1
+    both = lambda: ivf._load_adc_models(spark, served["cents"], served["model"])
+    assert _jobs(spark, both) == 1
+    for name, limit in (("flat_expr", 5), ("flat_gemm", 5), ("adc_refined", 9)):
+        call = _serving_paths(spark, served, _list_batch(spark, rows))[name]
+        n = _jobs(spark, lambda: call().toPandas())
+        assert n <= limit, (name, n)
+
+
+def test_model_loaders_round_trip_in_any_file_order(spark, centroids, emb, tmp_path):
+    """load_centroids / pq.load_model return exactly what was saved, even
+    when the rows sit in several files in reverse order (the ordering
+    is the driver's), and still reject a non-dense id range."""
+    import numpy as np
+
+    from vector_search_spark.operators import pq
+
+    cpath = str(tmp_path / "cents")
+    ivf.save_centroids(spark, centroids, cpath)
+    assert np.array_equal(ivf.load_centroids(spark, cpath), centroids)
+    spark.read.parquet(cpath).orderBy(F.col("cluster_id").desc()).repartition(
+        3
+    ).write.mode("overwrite").parquet(cpath + "_shuffled")
+    assert np.array_equal(ivf.load_centroids(spark, cpath + "_shuffled"), centroids)
+
+    model, _ = pq.train_pq(emb, m=8, k=16, seed=42, max_iter=2)
+    mpath = str(tmp_path / "model")
+    pq.save_model(spark, model, mpath)
+    spark.read.parquet(mpath).orderBy(F.col("m").desc(), F.col("k").desc()).repartition(
+        3
+    ).write.mode("overwrite").parquet(mpath + "_shuffled")
+    for path in (mpath, mpath + "_shuffled"):
+        assert np.array_equal(pq.load_model(spark, path).codebooks, model.codebooks)
+
+    # element-wise dense check: a duplicate with a compensating gap
+    bad = str(tmp_path / "cents_bad")
+    spark.createDataFrame(
+        [(i, [0.0, 1.0]) for i in (0, 1, 1, 3)],
+        "cluster_id int, centroid array<double>",
+    ).write.parquet(bad)
+    with pytest.raises(ValueError, match="non-dense"):
+        ivf.load_centroids(spark, bad)
+
+
+@pytest.mark.parametrize("metric", ["l2_sqr", "l2", "dot", "cosine"])
+def test_full_probe_expr_equals_brute_force_expr(
+    spark, queries, assigned, centroids, emb, metric
+):
+    """At nprobe == NC the numpy fold scorer gives exactly the Catalyst
+    brute-force rows: same neighbors, ranks and float distances."""
+    got = ivf.ivf_topk(
+        queries, assigned, centroids, k=K, nprobe=NC, metric=metric, impl="expr"
+    )
+    want = knn.brute_force_knn(queries, emb, k=K, metric=metric, impl="expr")
+    key = lambda df: sorted(
+        tuple(r) for r in df.select("query_id", "vec_id", "dist", "rank").collect()
+    )
+    assert key(got) == key(want)
+
+
+def test_route_guard_fallback_end_to_end(spark, served, queries, monkeypatch):
+    """VSS_ADC_DRIVER_ROUTE_TERMS=1 forces distributed routing on every
+    serving path; the rows must equal the driver-routed run's."""
+
+    def run():
+        return {
+            name: sorted(tuple(r) for r in call().collect())
+            for name, call in _serving_paths(spark, served, queries).items()
+        }
+
+    monkeypatch.delenv("VSS_ADC_DRIVER_ROUTE_TERMS", raising=False)
+    driver = run()
+    monkeypatch.setenv("VSS_ADC_DRIVER_ROUTE_TERMS", "1")
+    assert run() == driver
+    assert all(driver.values())
+
+
+@pytest.mark.parametrize(
+    "path", ["flat_expr", "flat_gemm", "adc", "adc_refined", "adc_range"]
+)
+def test_bad_query_vector_fails_by_name(spark, served, emb, path):
+    """A null or wrong-dimension query vector raises ValueError naming
+    its query id, at the call's one collect, on every serving path."""
+    good = [list(r.embedding) for r in emb.filter(F.col("vec_id") < 1).collect()]
+    for bad_id, vec in ((77, None), (78, good[0][:-1])):
+        qdf = _list_batch(spark, [(5, good[0]), (bad_id, vec)])
+        with pytest.raises(ValueError, match=f"query {bad_id}: "):
+            _serving_paths(spark, served, qdf)[path]()

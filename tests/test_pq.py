@@ -150,7 +150,7 @@ def test_load_model_validates_shape(spark, model, tmp_path):
     df.filter(~((F.col("m") == 0) & (F.col("k") == 0))).write.mode(
         "overwrite"
     ).parquet(str(tmp_path / "cb_missing.parquet"))
-    with pytest.raises(ValueError):
+    with pytest.raises(ValueError, match="ragged codebooks"):
         pq.load_model(spark, str(tmp_path / "cb_missing.parquet"))
 
 

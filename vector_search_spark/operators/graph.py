@@ -59,7 +59,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from vector_search_spark.functions.distance import as_double_array, l2_sqr
+from vector_search_spark.functions.distance import (
+    as_double_array,
+    fold_distance,
+    l2_sqr,
+)
 from vector_search_spark.operators import knn
 
 __all__ = [
@@ -785,18 +789,6 @@ def _row_sq_dist(B: np.ndarray, Q: np.ndarray) -> np.ndarray:
     return ((B - Q) ** 2).sum(axis=1)
 
 
-def _fold_sq_dist(B: np.ndarray, q: np.ndarray) -> np.ndarray:
-    """The descent's distance in Catalyst ``l2_sqr`` order: from 0.0,
-    ``acc = acc + (q_j - b_j)^2`` one dimension at a time (numpy's row
-    sum is pairwise, so it could break an argmin tie differently)."""
-    d = q - B
-    sq = d * d
-    acc = np.zeros(len(B))
-    for j in range(sq.shape[1]):
-        acc = acc + sq[:, j]
-    return acc
-
-
 # The one-task walk's input: ONE relation of tagged rows, so a single
 # coalesce(1) task reads the edges, the node vectors and the seeds
 # through the scan (never through the driver). Unused numeric fields
@@ -913,24 +905,29 @@ class _LocalGraph:
             i = np.lexsort((c, d))[0]
             return c[i], d[i]
 
+        def dist(c):
+            # Catalyst l2_sqr fold order: numpy's pairwise row sum could
+            # break an argmin tie differently
+            return fold_distance("l2_sqr", q[None, :], self.vecs(c))[0]
+
         anchor = np.array([self.entry])
         for layer in range(top, 1, -1):
             c = self.ball(layer, anchor, upper_hops)
             c = c[self.has_vec[c] & (self.level[c] >= 2)]
             if not len(c):
                 return None
-            anchor = np.array([best_of(c, _fold_sq_dist(self.vecs(c), q))[0]])
+            anchor = np.array([best_of(c, dist(c))[0]])
         c = self.ball(1, anchor, layer1_hops)
         c = c[self.has_vec[c]]
         if not len(c):
             return None
-        best, bd = best_of(c, _fold_sq_dist(self.vecs(c), q))
+        best, bd = best_of(c, dist(c))
         for _ in range(probe_rounds):
             nb = np.unique(self.neighbors(1, np.array([best])))
             nb = nb[self.has_vec[nb]]
             best, bd = best_of(
                 np.append(nb, best),
-                np.append(_fold_sq_dist(self.vecs(nb), q), bd),
+                np.append(dist(nb), bd),
             )
         return best
 

@@ -10,17 +10,20 @@ and stored partitioned by ``cluster_id``; a query is routed to its
 
 Scale shape (the part that matters at 100 TB):
 
-- the coarse centroid model is tiny (NC x D doubles) — broadcast;
-- routing is queries x centroids (broadcast) + window top-nprobe —
-  negligible;
-- the candidate scan is ``base.filter(cluster_id IN routed)``: over a
-  parquet layout partitioned by ``cluster_id`` this is *partition
-  pruning* — Catalyst never reads the other cells' files (see
-  tests/test_plans.py: PartitionFilters);
-- scoring within the routed cells is an equi-join on ``cluster_id``
-  (broadcast routes) + the Catalyst distance fold, or the BLAS
-  ``mapInPandas`` path for heavy workloads — either way the shuffle
-  only ever carries ~k rows per (query, probed cell).
+- the coarse centroid model is tiny (NC x D doubles) and a serving
+  call's query batch is caller-bounded: the call collects the batch to
+  the driver ONCE, routes it there (the numpy twin of the Catalyst
+  fold, so the routed cells are exactly :func:`route_queries`') and
+  broadcasts ``(query ids, vectors, cell -> routed queries)``;
+- the candidate scan is ``base.filter(cluster_id IN (routed cells))``
+  with the cells as literals: over a parquet layout partitioned by
+  ``cluster_id`` this is a STATIC partition filter — the other cells'
+  directories are never read (tests/test_ivf.py checks the executed
+  plan and the scan's partition count);
+- scoring within the routed cells is one ``mapInPandas`` pass: each
+  cell's rows meet only the queries routed to that cell, and each
+  (query, cell) emits its partial top-k, so the shuffle only ever
+  carries ~k rows per (query, probed cell).
 
 Recall is governed by nprobe/NC exactly as in FAISS-style IVF-Flat;
 nprobe == NC degenerates to exact brute force (tests assert recall
@@ -36,9 +39,18 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from vector_search_spark.functions.distance import as_double_array, distance
+from vector_search_spark.functions.distance import (
+    METRICS,
+    as_double_array,
+    distance,
+    fold_distance,
+)
 from vector_search_spark.operators import kmeans
-from vector_search_spark.operators.knn import topk_per_query
+from vector_search_spark.operators.knn import (
+    _gemm_batch_dists,
+    _gemm_queries,
+    topk_per_query,
+)
 
 
 def assign_clusters(
@@ -111,6 +123,167 @@ def route_queries(
     )
 
 
+# Most (query, row) pairs one scorer tile holds (8 MB of float64): the
+# queries routed to a cell are scored in chunks, so a task never builds
+# an nq x rows x D cube or an unbounded nq x rows matrix.
+_TILE_PAIRS = 1 << 20
+
+
+def _collect_batch(
+    queries: DataFrame, dim: int, query_id_col: str, query_vec_col: str
+) -> tuple[np.ndarray, np.ndarray]:
+    """The ONE driver collect of a serving call's caller-bounded query
+    batch: ``(query ids, (nq, dim) float64 vectors)``. A null or
+    wrong-dimension query vector fails here, by query id, instead of
+    later as an opaque numpy error or a NULL distance ranked first."""
+    pdf = queries.select(
+        F.col(query_id_col).alias("query_id"),
+        as_double_array(query_vec_col).alias("qv"),
+    ).toPandas()
+    if not len(pdf):
+        raise ValueError("empty query set")
+    for qid, v in zip(pdf["query_id"], pdf["qv"]):
+        if v is None or len(v) != dim:
+            got = "a null vector" if v is None else f"{len(v)} dimensions"
+            raise ValueError(
+                f"query {qid}: {got}; the index has {dim} dimensions"
+            )
+    return (
+        pdf["query_id"].to_numpy(dtype=np.int64),
+        np.vstack(pdf["qv"].to_numpy()).astype(np.float64),
+    )
+
+
+def _batch_frame(spark, qids: np.ndarray, Q: np.ndarray) -> DataFrame:
+    """The collected batch as a driver-built ``(query_id, _qv)``
+    DataFrame. It plans as a LocalTableScan, so reading it again never
+    re-scans the caller's DataFrame (often a Python-RDD-backed
+    ``createDataFrame(list)``, which re-runs Python to be read)."""
+    return spark.createDataFrame(
+        pd.DataFrame({"query_id": qids, "_qv": Q.tolist()}),
+        "query_id long, _qv array<double>",
+    )
+
+
+def _route_batch(
+    spark, qids: np.ndarray, Q: np.ndarray, centroids: np.ndarray, nprobe: int
+) -> dict[int, np.ndarray]:
+    """Route a collected batch to its ``nprobe`` nearest cells:
+    ``{cell: ascending positions of the queries routed there}``.
+
+    On the driver by default: :func:`fold_distance` gives the Catalyst
+    ``l2_sqr`` values bit for bit, and a stable argsort breaks ties on
+    the lower cluster_id — :func:`route_queries`' window order, so the
+    routed pairs are the same.
+
+    GUARD: the fold costs ~4-9 ns per (query, cell, dim) term on the
+    driver (measured on a 4-core x86-64 server) and holds an nq x NC
+    matrix. nq is caller-bounded but NC grows with the corpus, so when
+    nq x NC x D exceeds ``VSS_ADC_DRIVER_ROUTE_TERMS`` (default 2e6
+    terms, ~10-20 ms) routing runs distributed: :func:`route_queries`
+    over the driver-built batch frame, collecting only the nq x nprobe
+    pairs. Membership is the same either way, and probe order never
+    matters downstream.
+    """
+    C = np.asarray(centroids, dtype=np.float64)
+    budget = int(float(os.environ.get("VSS_ADC_DRIVER_ROUTE_TERMS", "2000000")))
+    if 0 < budget < Q.size * len(C):
+        rpdf = route_queries(
+            _batch_frame(spark, qids, Q), C, nprobe, "query_id", "_qv"
+        ).toPandas()
+        pos = {int(q): i for i, q in enumerate(qids)}
+        pairs = [
+            (int(c), pos[int(q)])
+            for q, c in zip(rpdf["query_id"], rpdf["cluster_id"])
+        ]
+    else:
+        near = np.argsort(fold_distance("l2_sqr", Q, C), axis=1, kind="stable")
+        pairs = [
+            (int(c), i) for i, row in enumerate(near[:, :nprobe]) for c in row
+        ]
+    cells: dict[int, list[int]] = {}
+    for c, i in sorted(pairs):
+        cells.setdefault(c, []).append(i)
+    return {c: np.asarray(v, dtype=np.int64) for c, v in cells.items()}
+
+
+def _query_chunks(pos: np.ndarray, n_rows: int):
+    """Slices of a cell's routed query positions, each scoring at most
+    ``_TILE_PAIRS`` pairs against ``n_rows`` rows."""
+    step = max(1, _TILE_PAIRS // max(1, n_rows))
+    return (pos[lo : lo + step] for lo in range(0, len(pos), step))
+
+
+def _topk_rows(k: int):
+    """Emitter of each query's ``k`` nearest rows in a scored tile under
+    the ``(dist, vec_id)`` tie-break: a partial top-k that the window
+    of :func:`topk_per_query` completes. Every row tied with the k-th
+    distance reaches the tie-break, so the final ranks are exact."""
+
+    def emit(q_ids, vids, D):
+        kk = min(k, D.shape[1])
+        kth = np.partition(D, kk - 1, axis=1)[:, kk - 1]
+        out_q, out_v, out_d = [], [], []
+        for i in range(len(D)):
+            idx = np.flatnonzero(~(D[i] > kth[i]))
+            idx = idx[np.lexsort((vids[idx], D[i, idx]))[:k]]
+            out_q.append(np.full(len(idx), q_ids[i]))
+            out_v.append(vids[idx])
+            out_d.append(D[i, idx])
+        return pd.DataFrame(
+            {
+                "query_id": np.concatenate(out_q),
+                "vec_id": np.concatenate(out_v),
+                "dist": np.concatenate(out_d),
+            }
+        )
+
+    return emit
+
+
+def _radius_rows(radius: float):
+    """Emitter of every (query, row) pair of a scored tile within
+    ``radius`` (inclusive)."""
+    r = float(radius)
+
+    def emit(q_ids, vids, D):
+        qi, vj = np.nonzero(D <= r)
+        return pd.DataFrame(
+            {"query_id": q_ids[qi], "vec_id": vids[vj], "dist": D[qi, vj]}
+        )
+
+    return emit
+
+
+def _scan_cells(src: DataFrame, qids, cells: dict, extra, score, emit):
+    """The routed-cell scan of every IVF serving path. ``src`` carries
+    ``(_id, _x, _cell)``; ``_cell IN (routed cells)`` is a static
+    partition filter on a cell-partitioned layout. One ``mapInPandas``
+    pass groups each Arrow batch by cell: ``score(extra, cells[cell],
+    rows)`` yields ``(query positions, distance tile)`` chunks and
+    ``emit`` turns each tile into ``(query_id, vec_id, dist)`` rows.
+    ``(qids, cells, extra)`` reaches the executors as one broadcast."""
+    bc = src.sparkSession.sparkContext.broadcast((qids, cells, extra))
+
+    def fn(batches):
+        b_qids, b_cells, b_extra = bc.value
+        for pdf in batches:
+            out = []
+            for cell, grp in pdf.groupby("_cell"):
+                hit = b_cells.get(int(cell))
+                if hit is None:
+                    continue
+                vids = grp["_id"].to_numpy(dtype=np.int64)
+                for pos, D in score(b_extra, hit, grp):
+                    out.append(emit(b_qids[pos], vids, D))
+            if out:
+                yield pd.concat(out, ignore_index=True)
+
+    return src.filter(F.col("_cell").isin(sorted(cells))).mapInPandas(
+        fn, "query_id long, vec_id long, dist double"
+    )
+
+
 def ivf_topk(
     queries: DataFrame,
     assigned_base: DataFrame,
@@ -131,114 +304,54 @@ def ivf_topk(
     :func:`assign_clusters` or a partitioned read of
     :func:`write_index` output). Returns (query_id, vec_id, dist, rank).
 
-    ``impl='expr'``: broadcast the (query_id, cluster_id) routing pairs
-    and the query vectors, equi-join base on ``cluster_id`` — Catalyst
-    turns the IN-filter into partition pruning on a partitioned layout —
-    then the codegen distance fold + window top-k.
+    SERVING CONTRACT (query side): the query batch is CALLER-BOUNDED.
+    It is collected to the driver once, when this function is called,
+    routed there (:func:`_route_batch`) and broadcast with the
+    cell -> routed-queries map; the returned plan scans only the base,
+    through a static ``cluster_col IN (routed cells)`` partition
+    filter, in one ``mapInPandas`` pass. A null or wrong-dimension
+    query vector raises ValueError naming its query id. A corpus-sized
+    query side (near-dup blocking) belongs on :func:`ivf_range` with
+    ``broadcast_queries=False`` or ``dedup.embedding_near_dup``.
 
-    ``impl='gemm'``: same routed filter, then one BLAS pass over the
-    surviving partitions; each Arrow batch is grouped by cell and scored
-    against just that cell's queries, emitting per-batch partial top-k.
-    Use when (routed candidates x queries) is compute-bound.
+    ``impl`` picks only the in-cell kernel. ``'expr'`` scores with
+    :func:`fold_distance`, bit-identical to the Catalyst distance fold:
+    at ``nprobe == NC`` the rows equal ``knn.brute_force_knn(
+    impl='expr')``'s exactly (tested). ``'gemm'`` scores with the BLAS
+    expansion of ``knn._gemm_batch_dists``, last-bit different from the
+    fold and faster when (routed rows x queries) is compute-bound.
+    Either way each (query, cell) emits a partial top-k under the
+    ``(dist, vec_id)`` tie-break and a window completes it.
     """
-    routes = route_queries(
-        queries, centroids, nprobe, query_id_col, query_vec_col
-    )
-    b = assigned_base.select(
-        F.col(base_id_col).alias("vec_id"),
-        as_double_array(base_vec_col).alias("_bv"),
+    if impl not in ("expr", "gemm"):
+        raise ValueError(f"unknown impl {impl!r}")
+    if metric not in METRICS:
+        raise ValueError(f"unknown metric {metric!r}; one of {sorted(METRICS)}")
+    spark = queries.sparkSession
+    C = np.asarray(centroids, dtype=np.float64)
+    qids, Q = _collect_batch(queries, C.shape[1], query_id_col, query_vec_col)
+    cells = _route_batch(spark, qids, Q, C, nprobe)
+    extra = Q if impl == "expr" else _gemm_queries(metric, Q)
+
+    def score(extra, pos, grp):
+        B = np.vstack(grp["_x"].to_numpy()).astype(np.float64)
+        for p in _query_chunks(pos, len(B)):
+            if impl == "expr":
+                yield p, fold_distance(metric, extra[p], B)
+            else:
+                Qm, qn2 = extra
+                yield p, _gemm_batch_dists(
+                    metric, Qm[p], None if qn2 is None else qn2[p], B
+                )
+
+    src = assigned_base.select(
+        F.col(base_id_col).alias("_id"),
+        as_double_array(base_vec_col).alias("_x"),
         F.col(cluster_col).alias("_cell"),
     )
-
-    if impl == "expr":
-        q = F.broadcast(
-            queries.select(
-                F.col(query_id_col).alias("query_id"),
-                as_double_array(query_vec_col).alias("_qv"),
-            )
-        )
-        cand = b.join(
-            F.broadcast(routes.withColumnRenamed("cluster_id", "_cell")),
-            "_cell",
-        )
-        scored = cand.join(q, "query_id").select(
-            "query_id",
-            "vec_id",
-            distance(metric, "_qv", "_bv").alias("dist"),
-        )
-        return topk_per_query(scored, k)
-
-    if impl != "gemm":
-        raise ValueError(f"unknown impl {impl!r}")
-
-    # ---- gemm: routed filter + per-cell BLAS scoring ----
-    rpdf = routes.toPandas()
-    qpdf = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        as_double_array(query_vec_col).alias("qv"),
-    ).toPandas()
-    if not len(qpdf):
-        raise ValueError("empty query set")
-    qids = qpdf["query_id"].to_numpy(dtype=np.int64)
-    Q = np.vstack(qpdf["qv"].to_numpy()).astype(np.float64)
-    qpos = {int(qid): i for i, qid in enumerate(qids)}
-    cell_to_q: dict[int, np.ndarray] = {
-        int(cell): np.fromiter(
-            (qpos[int(q_)] for q_ in grp["query_id"]), dtype=np.int64
-        )
-        for cell, grp in rpdf.groupby("cluster_id")
-    }
-    routed_cells = sorted(cell_to_q)
-    bc = queries.sparkSession.sparkContext.broadcast(
-        (qids, Q, (Q * Q).sum(axis=1), cell_to_q)
+    return topk_per_query(
+        _scan_cells(src, qids, cells, extra, score, _topk_rows(k)), k
     )
-
-    pruned = b.filter(F.col("_cell").isin(routed_cells))
-
-    def fn(batches):
-        b_qids, b_Q, b_qn2, b_map = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            for cell, grp in pdf.groupby("_cell"):
-                qidx = b_map.get(int(cell))
-                if qidx is None or not len(grp):
-                    continue
-                vids = grp["vec_id"].to_numpy(dtype=np.int64)
-                B = np.vstack(grp["_bv"].to_numpy()).astype(np.float64)
-                D = (
-                    b_qn2[qidx][:, None]
-                    + (B * B).sum(axis=1)[None, :]
-                    - 2.0 * (b_Q[qidx] @ B.T)
-                )
-                np.maximum(D, 0.0, out=D)  # cancellation clamp
-                kk = min(k, D.shape[1])
-                cand = (
-                    np.argpartition(D, kk - 1, axis=1)[:, :kk]
-                    if kk < D.shape[1]
-                    else np.broadcast_to(
-                        np.arange(D.shape[1]), (len(qidx), D.shape[1])
-                    )
-                )
-                for i, qi in enumerate(qidx):
-                    cj = cand[i]
-                    dj = D[i, cj]
-                    order = np.lexsort((vids[cj], dj))[:k]
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": b_qids[qi],
-                                "vec_id": vids[cj[order]],
-                                "dist": dj[order],
-                            }
-                        )
-                    )
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    scored = pruned.mapInPandas(fn, "query_id long, vec_id long, dist double")
-    return topk_per_query(scored, k)
 
 
 def ivf_range(
@@ -338,85 +451,32 @@ def residuals(
     )
 
 
-def _adc_lut_routes(
-    queries: DataFrame,
+def _adc_scan(
+    spark,
+    qids: np.ndarray,
+    Q: np.ndarray,
+    codes: DataFrame,
     centroids: np.ndarray,
     model,
     nprobe: int,
     residual: bool,
-    query_id_col: str,
-    query_vec_col: str,
-):
-    """Shared IVFADC query-side prep (r14 — factored so the topk and
-    range paths build the SAME routed per-cell LUTs): route queries,
-    collect the (model-sized) query batch, and build per-cell ADC
-    lookup tables. Returns ``(qids, cell_to_q, routed_cells, m)``
-    where ``cell_to_q[cell] = (query positions, (nq_cell, M, K)
-    LUT)``. Driver state is routed-pairs x M x K doubles — bounded by
-    the caller's query batch, never the corpus.
+    id_col: str,
+    code_col: str,
+    cluster_col: str,
+    emit,
+) -> DataFrame:
+    """Shared IVFADC body of the topk and range paths (so the two can
+    never disagree on routing or LUTs): route the collected batch
+    (:func:`_route_batch`), build each routed cell's ADC lookup tables
+    on the driver, and scan the routed cells' codes (:func:`_scan_cells`)
+    summing M LUT gathers per (query, code). Driver state is
+    routed-pairs x M x K doubles — bounded by the caller's query batch,
+    never the corpus. Non-residual codes share one global LUT sliced
+    per cell; residual codes get a LUT from (q - cell centroid)."""
+    from vector_search_spark.operators import pq as _pq
 
-    Routing happens DRIVER-side (r17 optimization): the query batch is
-    already collected here for the LUTs, so running
-    :func:`route_queries` as a distributed job was one extra scheduled
-    broadcast+window pass per serving call for zero new information.
-    The distance loop replays the Catalyst l2 fold's sequential
-    index-order sum EXACTLY (same IEEE adds in the same order), and
-    ties break by ascending cluster_id exactly like route_queries'
-    window — routing is bit-identical, value-checked by the routed
-    entries' oracles.
-
-    GUARD (r18, r17 judge "What's wrong #3"): the replay loop is
-    interpreted Python at a measured ~300 ns per (query, cell, dim)
-    term — caller-bounded in nq, but NC grows with the corpus, and at
-    index scale (NC ~ 10^5-10^6 cells) the loop is a multi-minute
-    driver stall. When nq x NC x D exceeds
-    ``VSS_ADC_DRIVER_ROUTE_TERMS`` (default 2e6 terms ≈ 0.6 s, below
-    the ~1 s the distributed pass costs at bench scale), routing falls
-    back to the distributed :func:`route_queries` — the pre-r17 path,
-    bit-identical by construction (only MEMBERSHIP of the (query,
-    cell) pairs feeds the LUT build; probe order never does).
-    """
-    qpdf = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        as_double_array(query_vec_col).alias("qv"),
-    ).toPandas()
-    if not len(qpdf):
-        raise ValueError("empty query set")
+    C = np.asarray(centroids, dtype=np.float64)
     m, kcent, dsub = model.codebooks.shape
-    qids = qpdf["query_id"].to_numpy(dtype=np.int64)
-    Qflat = np.vstack(qpdf["qv"].to_numpy()).astype(np.float64)
-
-    def _seq_l2(q, c) -> float:
-        # the Catalyst fold, replayed: (x-y)*(x-y) terms accumulated
-        # LEFT-TO-RIGHT from 0.0 — bit-identical to distance("l2_sqr")
-        acc = 0.0
-        for x, y in zip(q, c):
-            d = x - y
-            acc += d * d
-        return acc
-
-    cents = np.ascontiguousarray(centroids, dtype=np.float64)
-    route_budget = int(
-        float(os.environ.get("VSS_ADC_DRIVER_ROUTE_TERMS", "2000000"))
-    )
-    n_terms = len(qids) * len(cents) * Qflat.shape[1]
-    if route_budget > 0 and n_terms > route_budget:
-        # distributed routing (corpus-scaled NC): collect only the
-        # nq x nprobe (query_id, cluster_id) membership pairs
-        rpdf = route_queries(
-            queries, centroids, nprobe, query_id_col, query_vec_col
-        ).toPandas()
-        pos = {int(q): i for i, q in enumerate(qids)}
-        per_query_cells: list[list[int]] = [[] for _ in qids]
-        for q, c in zip(rpdf["query_id"], rpdf["cluster_id"]):
-            per_query_cells[pos[int(q)]].append(int(c))
-    else:
-        per_query_cells = []
-        for i in range(len(qids)):
-            ds = sorted(
-                ((_seq_l2(Qflat[i], cents[c]), c) for c in range(len(cents))),
-            )
-            per_query_cells.append([c for _, c in ds[: int(nprobe)]])
 
     def lut_for(Qsub: np.ndarray) -> np.ndarray:
         Q3 = Qsub.reshape(len(Qsub), m, dsub)
@@ -431,22 +491,27 @@ def _adc_lut_routes(
         np.maximum(out, 0.0, out=out)  # cancellation clamp
         return out
 
-    # cell -> (query positions, per-cell LUT). Non-residual: one global
-    # LUT sliced per cell; residual: LUT from (q - cell centroid).
-    glob = None if residual else lut_for(Qflat)
-    cell_members: dict[int, list[int]] = {}
-    for i, cells in enumerate(per_query_cells):
-        for c in cells:
-            cell_members.setdefault(int(c), []).append(i)
-    cell_to_q: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-    for cell, members in cell_members.items():
-        qidx = np.asarray(members, dtype=np.int64)
-        if residual:
-            lut_c = lut_for(Qflat[qidx] - cents[int(cell)][None, :])
-        else:
-            lut_c = glob[qidx]
-        cell_to_q[int(cell)] = (qidx, lut_c)
-    return qids, cell_to_q, sorted(cell_to_q), m
+    glob = None if residual else lut_for(Q)
+    cells = {
+        cell: (pos, lut_for(Q[pos] - C[cell][None, :]) if residual else glob[pos])
+        for cell, pos in _route_batch(spark, qids, Q, C, nprobe).items()
+    }
+
+    def score(_, hit, grp):
+        pos, lut = hit
+        cm = _pq._code_matrix(grp["_x"])
+        for i in _query_chunks(np.arange(len(pos)), len(cm)):
+            D = np.zeros((len(i), len(cm)))
+            for mi in range(m):
+                D += lut[i, mi, :][:, cm[:, mi]]
+            yield pos[i], D
+
+    src = codes.select(
+        F.col(id_col).alias("_id"),
+        F.col(code_col).alias("_x"),
+        F.col(cluster_col).alias("_cell"),
+    )
+    return _scan_cells(src, qids, cells, None, score, emit)
 
 
 def ivf_adc_topk(
@@ -476,74 +541,17 @@ def ivf_adc_topk(
     own LUT built from the query's residual against THAT cell's
     centroid — still driver-tiny (routed-pairs x M x K doubles).
 
-    EXECUTOR MEMORY BOUND (r15, judge ask): the scoring kernel
-    materializes a dense ``(nq_cell x cell_rows_in_batch)`` float64
-    tile per (cell, Arrow batch) — ``nq_cell`` = queries routed to the
-    cell, ``cell_rows_in_batch`` <= min(cell size, Arrow batch size,
-    default 10k rows). The bound therefore rests on (a) the serving
-    contract's CALLER-BOUNDED query batch and (b) cell sizes kept near
-    the mean by :func:`rebalance_index` (its ``skew_factor`` cap is
-    the invariant — asserted in tests/test_ivf.py). A 4x-skew cell at
-    10k-row batches with 100 routed queries is an 8 MB tile; without
-    rebalancing a mega-cell grows this linearly.
+    EXECUTOR MEMORY: each (cell, Arrow batch) is scored in query
+    chunks of at most ``_TILE_PAIRS`` (query, code) pairs — an 8 MB
+    float64 tile — whatever the batch or cell size.
     """
-    from vector_search_spark.operators import pq as _pq
-
-    qids, cell_to_q, routed_cells, m = _adc_lut_routes(
-        queries, centroids, model, nprobe, residual,
-        query_id_col, query_vec_col,
+    batch = _collect_batch(
+        queries, np.shape(centroids)[1], query_id_col, query_vec_col
     )
-    bc = queries.sparkSession.sparkContext.broadcast((qids, cell_to_q))
-
-    src = codes.select(
-        F.col(id_col).alias("_id"),
-        F.col(code_col).alias("_c"),
-        F.col(cluster_col).alias("_cell"),
-    ).filter(F.col("_cell").isin(routed_cells))
-
-    def fn(batches):
-        b_qids, b_map = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            for cell, grp in pdf.groupby("_cell"):
-                hit = b_map.get(int(cell))
-                if hit is None or not len(grp):
-                    continue
-                qidx, lut_c = hit
-                vids = grp["_id"].to_numpy(dtype=np.int64)
-                cm = _pq._code_matrix(grp["_c"])
-                D = np.zeros((len(qidx), len(vids)))
-                for mi in range(m):
-                    D += lut_c[:, mi, :][
-                        np.arange(len(qidx))[:, None], cm[:, mi][None, :]
-                    ]
-                kk = min(k, D.shape[1])
-                cand = (
-                    np.argpartition(D, kk - 1, axis=1)[:, :kk]
-                    if kk < D.shape[1]
-                    else np.broadcast_to(
-                        np.arange(D.shape[1]), (len(qidx), D.shape[1])
-                    )
-                )
-                for i, qi in enumerate(qidx):
-                    cj = cand[i]
-                    dj = D[i, cj]
-                    order = np.lexsort((vids[cj], dj))[:k]
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": b_qids[qi],
-                                "vec_id": vids[cj[order]],
-                                "dist": dj[order],
-                            }
-                        )
-                    )
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    scored = src.mapInPandas(fn, "query_id long, vec_id long, dist double")
+    scored = _adc_scan(
+        queries.sparkSession, *batch, codes, centroids, model, nprobe,
+        residual, id_col, code_col, cluster_col, _topk_rows(k),
+    )
     return topk_per_query(scored, k)
 
 
@@ -571,7 +579,7 @@ def ivf_adc_range(
     is within ``radius``, inside the ``nprobe`` routed cells only.
 
     Same query-side prep as :func:`ivf_adc_topk` (shared
-    ``_adc_lut_routes`` — the two paths can never disagree on LUTs or
+    ``_adc_scan`` — the two paths can never disagree on LUTs or
     routing), same partition-prunable code scan; the tail is a
     row-local numpy mask instead of partial-top-k + window, so the
     result STREAMS out of the scan stage with zero shuffle — the
@@ -583,10 +591,7 @@ def ivf_adc_range(
     MEMBERSHIP AND DISTANCES ARE IN ADC SPACE — for a true-metric
     radius use :func:`ivf_adc_range_refined` (exact re-scoring of the
     survivors, the pq.refine_topk repair). Same executor memory bound
-    as :func:`ivf_adc_topk`: a dense (nq_cell x cell_rows_in_batch)
-    tile per (cell, Arrow batch), bounded by the caller-sized query
-    batch and :func:`rebalance_index`'s skew cap (see ivf_adc_topk's
-    docstring for the arithmetic).
+    as :func:`ivf_adc_topk`.
 
     SERVING CONTRACT (query side): the query batch is CALLER-BOUNDED —
     the per-query LUTs collect to the driver. A corpus-sized query
@@ -594,55 +599,13 @@ def ivf_adc_range(
     (:func:`ivf_range` / ``knn.range_search(broadcast_queries=False)``)
     or :func:`dedup.embedding_near_dup`, not the compressed one.
     """
-    from vector_search_spark.operators import pq as _pq
-
-    qids, cell_to_q, routed_cells, m = _adc_lut_routes(
-        queries, centroids, model, nprobe, residual,
-        query_id_col, query_vec_col,
+    batch = _collect_batch(
+        queries, np.shape(centroids)[1], query_id_col, query_vec_col
     )
-    bc = queries.sparkSession.sparkContext.broadcast((qids, cell_to_q))
-    r = float(radius)
-
-    src = codes.select(
-        F.col(id_col).alias("_id"),
-        F.col(code_col).alias("_c"),
-        F.col(cluster_col).alias("_cell"),
-    ).filter(F.col("_cell").isin(routed_cells))
-
-    def fn(batches):
-        b_qids, b_map = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            for cell, grp in pdf.groupby("_cell"):
-                hit = b_map.get(int(cell))
-                if hit is None or not len(grp):
-                    continue
-                qidx, lut_c = hit
-                vids = grp["_id"].to_numpy(dtype=np.int64)
-                cm = _pq._code_matrix(grp["_c"])
-                D = np.zeros((len(qidx), len(vids)))
-                for mi in range(m):
-                    D += lut_c[:, mi, :][
-                        np.arange(len(qidx))[:, None], cm[:, mi][None, :]
-                    ]
-                qi, vj = np.nonzero(D <= r)
-                if not len(qi):
-                    continue
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": b_qids[qidx[qi]],
-                            "vec_id": vids[vj],
-                            "dist": D[qi, vj],
-                        }
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    return src.mapInPandas(fn, "query_id long, vec_id long, dist double")
+    return _adc_scan(
+        queries.sparkSession, *batch, codes, centroids, model, nprobe,
+        residual, id_col, code_col, cluster_col, _radius_rows(radius),
+    )
 
 
 def _exact_rescore(
@@ -853,17 +816,24 @@ def ivf_adc_topk_refined(
     shortlist (codes ⊆ points — see :func:`_exact_rescore`).
     Returns (query_id, vec_id, dist, rank<=k) with EXACT distances.
     """
-    cand = ivf_adc_topk(
-        queries, codes, centroids, model, k=shortlist, nprobe=nprobe,
-        residual=residual, query_id_col=query_id_col,
-        query_vec_col=query_vec_col, id_col=id_col, code_col=code_col,
-        cluster_col=cluster_col,
+    spark = queries.sparkSession
+    qids, Q = _collect_batch(
+        queries, np.shape(centroids)[1], query_id_col, query_vec_col
+    )
+    cand = topk_per_query(
+        _adc_scan(
+            spark, qids, Q, codes, centroids, model, nprobe, residual,
+            id_col, code_col, cluster_col, _topk_rows(shortlist),
+        ),
+        shortlist,
     ).select("query_id", "vec_id")
     # candidate volume is nq x shortlist BY CONSTRUCTION (caller-bounded
     # query batch per the serving contract) -> explicit broadcast, no
-    # shuffle of the raw-vector table (r15 advisor, see _exact_rescore)
+    # shuffle of the raw-vector table (r15 advisor, see _exact_rescore).
+    # The query side is the driver copy of the batch, so the caller's
+    # DataFrame is read once per call.
     scored = _exact_rescore(
-        cand, queries, points, query_id_col, query_vec_col,
+        cand, _batch_frame(spark, qids, Q), points, "query_id", "_qv",
         id_col, vec_col, strict=strict, broadcast_cand=True,
     ).select("query_id", "vec_id", "dist")
     return topk_per_query(scored, k)
@@ -904,8 +874,6 @@ def adc_search_index(
     ``shortlist`` / ``vec_col`` / ``strict`` configure that re-rank
     stage and are rejected without ``points_path`` — plain ADC serving
     has no stage 2 to configure."""
-    from vector_search_spark.operators import pq as _pq
-
     if points_path is None:
         refined_only = {"shortlist": shortlist is not None} | {
             kw: kw in kwargs for kw in ("vec_col", "strict")
@@ -917,8 +885,7 @@ def adc_search_index(
                 "points_path (r15 advisor: the two branches must not "
                 "accept different kwarg sets silently)"
             )
-    C = load_centroids(spark, centroids_path)
-    model = _pq.load_model(spark, model_path)
+    C, model = _load_adc_models(spark, centroids_path, model_path)
     codes = spark.read.parquet(codes_path)
     if base_filter is not None:
         codes = codes.filter(base_filter)
@@ -1218,8 +1185,6 @@ def adc_range_index(
     explicit ``margin=0.0`` slipped through while an explicit
     ``strict=False`` raised; now any explicitly-passed re-score knob,
     default-valued or not, requires ``points_path`` in both APIs)."""
-    from vector_search_spark.operators import pq as _pq
-
     if points_path is None:
         refined_only = {"margin": margin is not None} | {
             kw: kw in kwargs for kw in ("vec_col", "strict")
@@ -1230,8 +1195,7 @@ def adc_range_index(
                 f"{bad} configure the exact re-score stage and require "
                 "points_path — ADC-space radius serving has no stage 2"
             )
-    C = load_centroids(spark, centroids_path)
-    model = _pq.load_model(spark, model_path)
+    C, model = _load_adc_models(spark, centroids_path, model_path)
     codes = spark.read.parquet(codes_path)
     if base_filter is not None:
         codes = codes.filter(base_filter)
@@ -1253,6 +1217,9 @@ def adc_range_index(
     )
 
 
+CENTROIDS_SCHEMA = "cluster_id int, centroid array<double>"
+
+
 def save_centroids(spark, centroids: np.ndarray, path: str) -> None:
     """Persist the coarse-quantizer model beside the cell directories.
     rebalance_index RETURNS a grown centroid table — the index is only
@@ -1264,9 +1231,7 @@ def save_centroids(spark, centroids: np.ndarray, path: str) -> None:
         for i, c in enumerate(np.asarray(centroids, dtype=np.float64))
     ]
     (
-        spark.createDataFrame(
-            rows, "cluster_id int, centroid array<double>"
-        )
+        spark.createDataFrame(rows, CENTROIDS_SCHEMA)
         .coalesce(1)
         .write.mode("overwrite")
         .parquet(path)
@@ -1276,10 +1241,16 @@ def save_centroids(spark, centroids: np.ndarray, path: str) -> None:
 def load_centroids(spark, path: str) -> np.ndarray:
     """Reopen a :func:`save_centroids` model as the (NC, D) ndarray the
     routing/maintenance ops take. Model-sized driver collect by
-    definition; validates the id range is dense 0..NC-1."""
-    pdf = (
-        spark.read.parquet(path).orderBy("cluster_id").toPandas()
+    definition, in ONE job: the read takes the schema save_centroids
+    writes (no inference job) and the ordering is a driver-side stable
+    sort. Validates the id range is dense 0..NC-1."""
+    return _centroids_from_rows(
+        spark.read.schema(CENTROIDS_SCHEMA).parquet(path).toPandas(), path
     )
+
+
+def _centroids_from_rows(pdf: pd.DataFrame, path: str) -> np.ndarray:
+    pdf = pdf.sort_values("cluster_id", kind="stable")
     ids = pdf["cluster_id"].to_numpy()
     if len(ids) == 0 or not (ids == np.arange(len(ids))).all():
         # element-wise, not endpoints-only: duplicates with a
@@ -1287,6 +1258,30 @@ def load_centroids(spark, path: str) -> np.ndarray:
         # every row after the duplicate (round-7 review)
         raise ValueError(f"non-dense centroid ids in {path}")
     return np.vstack(pdf["centroid"].to_numpy())
+
+
+def _load_adc_models(spark, centroids_path: str, model_path: str):
+    """:func:`load_centroids` and ``pq.load_model`` together in ONE job
+    (one union scan, split on the driver, same validations): the
+    compressed one-calls need both, and each load is a whole scheduled
+    job of fixed cost."""
+    from vector_search_spark.operators import pq as _pq
+
+    cents = spark.read.schema(CENTROIDS_SCHEMA).parquet(centroids_path).select(
+        F.lit(True).alias("_coarse"), F.col("cluster_id").alias("m"),
+        F.lit(0).alias("k"), "centroid",
+    )
+    books = spark.read.schema(_pq.MODEL_SCHEMA).parquet(model_path).select(
+        F.lit(False).alias("_coarse"), "m", "k", "centroid"
+    )
+    pdf = cents.unionByName(books).toPandas()
+    coarse = pdf["_coarse"].to_numpy(dtype=bool)
+    return (
+        _centroids_from_rows(
+            pdf[coarse].rename(columns={"m": "cluster_id"}), centroids_path
+        ),
+        _pq._model_from_rows(pdf[~coarse]),
+    )
 
 
 def cell_stats(

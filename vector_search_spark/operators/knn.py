@@ -159,6 +159,20 @@ def _gemm_batch_dists(metric: str, Qm, qn2, B):
     return -(Qm @ B.T)  # dot (negated: smaller == closer)
 
 
+def _gemm_queries(metric: str, Q):
+    """``(Qm, qn2)`` — the query side :func:`_gemm_batch_dists` takes:
+    L2-normalized rows for cosine, ``||q||^2`` for the l2 metrics."""
+    if metric == "cosine":
+        qn = np.linalg.norm(Q, axis=1)
+        Qn = np.divide(Q, qn[:, None], out=np.zeros_like(Q), where=qn[:, None] != 0)
+        return Qn, None
+    if metric in ("l2_sqr", "l2"):
+        return Q, (Q * Q).sum(axis=1)
+    if metric == "dot":
+        return Q, None
+    raise ValueError(f"unknown metric {metric!r}")
+
+
 def score_topk_gemm(
     queries: DataFrame,
     base: DataFrame,
@@ -207,18 +221,8 @@ def score_topk_gemm(
     qids = qpdf["query_id"].to_numpy(dtype=np.int64)
     Q = np.vstack(qpdf["qv"].to_numpy()).astype(np.float64)
 
-    if metric == "cosine":
-        qn = np.linalg.norm(Q, axis=1)
-        Qn = np.divide(Q, qn[:, None], out=np.zeros_like(Q), where=qn[:, None] != 0)
-        payload = (qids, Qn, None)
-    elif metric in ("l2_sqr", "l2"):
-        payload = (qids, Q, (Q * Q).sum(axis=1))
-    elif metric == "dot":
-        payload = (qids, Q, None)
-    else:
-        raise ValueError(f"unknown metric {metric!r}")
-
-    bc = queries.sparkSession.sparkContext.broadcast(payload)
+    Qm, qn2 = _gemm_queries(metric, Q)
+    bc = queries.sparkSession.sparkContext.broadcast((qids, Qm, qn2))
     b = base.select(
         F.col(base_id_col).alias("vec_id"),
         as_double_array(base_vec_col).alias("bv"),

@@ -503,6 +503,9 @@ def rotate(
     return src.mapInPandas(fn, f"{id_col} long, {out_col} array<double>")
 
 
+MODEL_SCHEMA = "m int, k int, centroid array<double>"
+
+
 def save_model(spark: SparkSession, model: PQModel, path: str) -> None:
     m, k, dsub = model.codebooks.shape
     rows = [
@@ -510,20 +513,27 @@ def save_model(spark: SparkSession, model: PQModel, path: str) -> None:
         for mi in range(m)
         for ki in range(k)
     ]
-    spark.createDataFrame(rows, "m int, k int, centroid array<double>").write.mode(
-        "overwrite"
-    ).parquet(path)
+    spark.createDataFrame(rows, MODEL_SCHEMA).write.mode("overwrite").parquet(path)
 
 
 def load_model(spark: SparkSession, path: str) -> PQModel:
-    pdf = spark.read.parquet(path).orderBy("m", "k").toPandas()
+    """Reopen a :func:`save_model` codebook in ONE job: the read takes
+    the schema save_model writes (no inference job) and the (m, k)
+    ordering is a driver-side sort of the model-sized frame."""
+    return _model_from_rows(spark.read.schema(MODEL_SCHEMA).parquet(path).toPandas())
+
+
+def _model_from_rows(pdf) -> PQModel:
+    """:class:`PQModel` from collected ``(m, k, centroid)`` rows in any
+    order."""
+    pdf = pdf.sort_values(["m", "k"], kind="stable")
     m = int(pdf["m"].max()) + 1
     k = int(pdf["k"].max()) + 1
-    dsub = len(pdf["centroid"].iloc[0])
-    cb = np.vstack(pdf["centroid"].to_numpy()).astype(np.float64).reshape(m, k, dsub)
     # shape validation mirrors SetCodebooks (py/pq.py:351-371)
     if len(pdf) != m * k:
         raise ValueError(f"ragged codebooks: {len(pdf)} rows != {m}x{k}")
+    dsub = len(pdf["centroid"].iloc[0])
+    cb = np.vstack(pdf["centroid"].to_numpy()).astype(np.float64).reshape(m, k, dsub)
     return PQModel(cb)
 
 
